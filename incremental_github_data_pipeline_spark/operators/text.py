@@ -1200,36 +1200,42 @@ def bm25_topk(
         qterms.join(postings, "term")
         .join(dl, id_col)
         .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "_idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("_n") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "_s",
-            F.col("_idf")
-            * (F.col("tf") * F.lit(k1 + 1.0))
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (
-                    F.lit(1.0 - b)
-                    + F.lit(b) * F.col("dl") / F.col("_avgdl")
-                )
-            ),
+    )
+    return bm25_rank_hits(hits, qid_col, id_col, k, k1, b)
+
+
+def bm25_rank_hits(hits, qid_col: str, id_col: str, k: int, k1: float, b: float):
+    """Score and rank BM25 hits: the one scoring lane shared by
+    :func:`bm25_topk` and ``streaming.bm25_search_versioned``.
+    ``hits`` holds one row per (query, doc, query term) with the
+    term's ``tf`` in the doc, its document frequency ``df``, the doc
+    length ``dl``, and the corpus ``_n`` and ``_avgdl``.
+
+    The per-(query, doc) sum runs over ``decimal(38,18)`` contributions
+    and is cast back to double once: decimal addition is exact, so the
+    score does not depend on the order the shuffle delivers a doc's
+    terms in. Docs with equal term statistics get bit-equal scores and
+    the doc-id tie-break holds (a double sum differs by an ulp across
+    partitionings)."""
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("_n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    contribution = (
+        idf
+        * (F.col("tf") * F.lit(k1 + 1.0))
+        / (
+            F.col("tf")
+            + F.lit(k1)
+            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("_avgdl"))
         )
     )
     scored = hits.groupBy(qid_col, id_col).agg(
         F.count(F.lit(1)).alias("n_terms"),
         F.sum("tf").alias("sum_tf"),
-        F.sum("_s").alias("score"),
+        F.sum(contribution.cast("decimal(38,18)")).cast("double").alias("score"),
     )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
+    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

@@ -8,15 +8,24 @@ Layout under a table root::
     data/<uuid>.parquet/      one immutable parquet directory per commit
     _manifests/00000001.json  {"version", "files"|"parts", "n_rows", ...}
     _manifests/parts/<uuid>.jsonl   sharded file entries (large tables)
-    _latest                   text file holding the committed version number
+    _latest                   hint: a recently committed version number
 
-A commit writes its data directory first, then its manifest, then
-atomically renames a temp ``_latest`` pointer over the old one — readers
-referencing any already-committed version are never disturbed, and a
-crash mid-commit leaves the previous version intact (the half-written
-data dir is orphaned and swept by :func:`vacuum`). This is the
-single-writer design (like the reference's rename dance); multi-writer
-coordination would need a log store, out of scope.
+A commit writes its data directory first, then publishes its manifest
+put-if-absent (a hard link of a uniquely named temp file, which fails
+if the version file already exists): the manifest file IS the commit
+point. ``_latest`` is only a hint written afterwards;
+:func:`latest_version` steps forward from it while the next manifest
+exists. Readers referencing any already-committed version are never
+disturbed, and a crash mid-commit leaves the previous version intact
+(the half-written data dir is orphaned and swept by :func:`vacuum`).
+
+Concurrent writers on one table (same filesystem) never lose a commit:
+two writers racing for version N both try to publish ``N.json`` and
+exactly one link succeeds. The loser of a blind commit rebuilds its
+manifest on the new tip and retries, reusing its already-written data
+directory; the loser of an ``expected_version`` commit raises
+:class:`CommitConflict`; a loser carrying a ``txn_id`` first re-checks
+whether the winner committed that same token.
 
 Every read goes through the manifest's explicit file list — never a
 directory glob — so concurrent vacuum of OLD versions cannot break a
@@ -43,17 +52,17 @@ Idempotent commits: ``commit_version(..., txn_id=...)`` records the
 token in the manifest and turns a replayed commit with the same token
 into a no-op returning the already-committed version — the
 foreachBatch sink contract Structured Streaming requires (its
-checkpoint is only at-least-once; see
-``streaming.incremental.run_incremental_text_ingest``). Detection
-scans retained manifests, so version retention must exceed the replay
-horizon (one batch, in practice) — the same contract as Delta's
-``txn`` retention.
+checkpoint is only at-least-once; see the ``streaming.incremental``
+module docstring). Detection scans retained manifests, so version
+retention must exceed the replay horizon (one batch, in practice) —
+the same contract as Delta's ``txn`` retention.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from pathlib import Path
@@ -92,10 +101,15 @@ def _latest_path(root: Path) -> Path:
 
 
 def latest_version(root: str | Path) -> int | None:
-    p = _latest_path(Path(root))
-    if not p.exists():
-        return None
-    return int(p.read_text().strip())
+    """The newest committed version, or None for an empty table.
+    ``_latest`` is a hint that may trail a concurrent commit, so the
+    scan steps forward while the next version's manifest exists."""
+    root = Path(root)
+    p = _latest_path(root)
+    v = int(p.read_text().strip()) if p.exists() else 0
+    while (_manifest_dir(root) / f"{v + 1:08d}.json").exists():
+        v += 1
+    return v or None
 
 
 def _load_manifest(root: Path, version: int) -> dict:
@@ -248,7 +262,8 @@ def commit_version(
     the meantime — read-modify-write sequences like
     :func:`merge_version` stay lost-update-free without any lock. Use
     ``expected_version=None`` for blind appends, ``0`` to require an
-    empty table.
+    empty table. A blind commit that races another writer never
+    raises: it lands on top of the winner's version instead.
 
     ``txn_id`` makes the commit idempotent: if any retained manifest
     already carries the token, the call is a no-op returning that
@@ -260,9 +275,9 @@ def commit_version(
         raise ValueError("mode must be 'overwrite' or 'append'")
     root = Path(root)
     if txn_id is not None:
-        for m in reversed(history(root)):
-            if m.get("txn") == txn_id:
-                return m["version"]
+        done = _txn_version(root, txn_id)
+        if done is not None:
+            return done
     (root / "data").mkdir(parents=True, exist_ok=True)
     _manifest_dir(root).mkdir(parents=True, exist_ok=True)
     prev = latest_version(root)
@@ -270,16 +285,84 @@ def commit_version(
         raise CommitConflict(
             f"expected version {expected_version}, table is at {prev}"
         )
-    new_version = 1 if prev is None else prev + 1
 
     data_dir = root / "data" / f"{uuid.uuid4().hex}.parquet"
     df.write.mode("errorifexists").parquet(str(data_dir))
     spark = df.sparkSession
-    n_rows = _count_rows_from_footers(spark, data_dir)
+    n_new = _count_rows_from_footers(spark, data_dir)
     stats = (
         _file_stats(spark, data_dir, stats_cols) if stats_cols else {}
     )
+    schema_json = df.schema.jsonValue()
+    while True:
+        manifest, part = _next_manifest(
+            root, prev, mode, data_dir, n_new, stats, schema_json
+        )
+        if txn_id is not None:
+            manifest["txn"] = txn_id
+        if _publish_manifest(root, manifest):
+            break
+        # another writer took this version number first
+        if part is not None:
+            part.unlink()
+        done = _txn_version(root, txn_id) if txn_id is not None else None
+        if done is not None or expected_version is not None:
+            shutil.rmtree(data_dir, ignore_errors=True)
+        if done is not None:
+            return done
+        if expected_version is not None:
+            raise CommitConflict(
+                f"expected version {expected_version}, another writer "
+                f"committed version {manifest['version']}"
+            )
+        prev = latest_version(root)
 
+    new_version = manifest["version"]
+    ltmp = _latest_path(root).with_name(f"_latest.{uuid.uuid4().hex}.tmp")
+    ltmp.write_text(str(new_version))
+    os.replace(ltmp, _latest_path(root))  # hint only; see latest_version
+    return new_version
+
+
+def _txn_version(root: Path, txn_id: str) -> int | None:
+    """The retained version whose manifest carries ``txn_id``, if any."""
+    for m in reversed(history(root)):
+        if m.get("txn") == txn_id:
+            return m["version"]
+    return None
+
+
+def _publish_manifest(root: Path, manifest: dict) -> bool:
+    """Create the version's manifest file put-if-absent: a hard link of
+    a fully written, uniquely named temp file, so readers never see a
+    partial manifest and exactly one of two racing writers wins.
+    Returns False if the version already exists."""
+    mp = _manifest_dir(root) / f"{manifest['version']:08d}.json"
+    tmp = mp.with_name(f".{mp.name}.{uuid.uuid4().hex}.tmp")
+    tmp.write_text(json.dumps(manifest))
+    try:
+        os.link(tmp, mp)
+    except FileExistsError:
+        return False
+    finally:
+        tmp.unlink()
+    return True
+
+
+def _next_manifest(
+    root: Path,
+    prev: int | None,
+    mode: str,
+    data_dir: Path,
+    n_new: int,
+    stats: dict,
+    schema_json: dict,
+) -> tuple[dict, Path | None]:
+    """Build the manifest that commits ``data_dir`` on top of version
+    ``prev``. Returns it with the JSONL part it wrote, if any (see the
+    module docstring on sharding), so a writer that loses the race for
+    this version can drop the part and rebuild on the new tip."""
+    n_rows = n_new
     prev_manifest = None
     prev_files: list[str] = []
     prev_stats: dict = {}
@@ -299,7 +382,6 @@ def commit_version(
     # previous manifest's (an evolved append flips the flag off and the
     # read path falls back to footer merging). Pre-r16 manifests lack
     # the flag → treated as unstable, same behavior as before.
-    schema_json = df.schema.jsonValue()
     if mode == "overwrite" or prev is None:
         schema_stable = True
     else:
@@ -309,15 +391,13 @@ def commit_version(
             and prev_manifest.get("schema") == schema_json
         )
     manifest = {
-        "version": new_version,
+        "version": 1 if prev is None else prev + 1,
         "n_rows": n_rows,
         "ts": time.time(),
         "mode": mode,
         "schema": schema_json,
         "schema_stable": schema_stable,
     }
-    if txn_id is not None:
-        manifest["txn"] = txn_id
 
     prev_parts = (
         list(prev_manifest["parts"])
@@ -330,41 +410,33 @@ def commit_version(
     if prev_parts is None and n_files <= INLINE_FILES_MAX:
         manifest["files"] = prev_files + [str(data_dir)]
         manifest["stats"] = {**prev_stats, **stats}
-    else:
-        # Sharded representation: one immutable JSONL part per commit
-        # holding only the NEW entries; crossing the inline threshold
-        # rewrites the prior inline entries into the part once.
-        entries = [{"dir": str(data_dir), "stats_json": json.dumps(stats)}]
-        if prev_parts is None:
-            entries = [
-                {
-                    "dir": f,
-                    "stats_json": json.dumps(
-                        {
-                            p: b
-                            for p, b in prev_stats.items()
-                            if p.removeprefix("file://").startswith(f)
-                        }
-                    ),
-                }
-                for f in prev_files
-            ] + entries
-        _parts_dir(root).mkdir(parents=True, exist_ok=True)
-        part = _parts_dir(root) / f"{uuid.uuid4().hex}.jsonl"
-        ptmp = part.with_suffix(".jsonl.tmp")
-        ptmp.write_text("\n".join(json.dumps(e) for e in entries))
-        os.replace(ptmp, part)  # part visible atomically
-        manifest["parts"] = (prev_parts or []) + [str(part)]
-        manifest["n_files"] = n_files
-    mp = _manifest_dir(root) / f"{new_version:08d}.json"
-    tmp = mp.with_suffix(".json.tmp")
-    tmp.write_text(json.dumps(manifest))
-    os.replace(tmp, mp)  # manifest visible atomically
-
-    ltmp = _latest_path(root).with_suffix(".tmp")
-    ltmp.write_text(str(new_version))
-    os.replace(ltmp, _latest_path(root))  # commit point
-    return new_version
+        return manifest, None
+    # Sharded representation: one immutable JSONL part per commit
+    # holding only the NEW entries; crossing the inline threshold
+    # rewrites the prior inline entries into the part once.
+    entries = [{"dir": str(data_dir), "stats_json": json.dumps(stats)}]
+    if prev_parts is None:
+        entries = [
+            {
+                "dir": f,
+                "stats_json": json.dumps(
+                    {
+                        p: b
+                        for p, b in prev_stats.items()
+                        if p.removeprefix("file://").startswith(f)
+                    }
+                ),
+            }
+            for f in prev_files
+        ] + entries
+    _parts_dir(root).mkdir(parents=True, exist_ok=True)
+    part = _parts_dir(root) / f"{uuid.uuid4().hex}.jsonl"
+    ptmp = part.with_suffix(".jsonl.tmp")
+    ptmp.write_text("\n".join(json.dumps(e) for e in entries))
+    os.replace(ptmp, part)  # part visible atomically
+    manifest["parts"] = (prev_parts or []) + [str(part)]
+    manifest["n_files"] = n_files
+    return manifest, part
 
 
 def read_version(
@@ -551,8 +623,6 @@ def vacuum(root: str | Path, keep: int = 2) -> dict:
     manifests, then delete data directories no retained manifest
     references (orphans from crashed commits are swept too). Returns
     ``{"dropped_versions": [...], "deleted_dirs": n}``."""
-    import shutil
-
     if keep < 1:
         raise ValueError("keep must be >= 1")
     root = Path(root)

@@ -16,6 +16,26 @@ manual rerun for Structured Streaming:
   (sources.writers.write_rotating). On Delta/Iceberg the same call
   becomes ``MERGE INTO``; the interface is unchanged.
 
+Every ``run_incremental_*`` ingester is its per-batch logic on top of
+one ingest loop, :func:`_ingest`: a single ``foreachBatch`` stream with
+the ``availableNow`` trigger over the ingester's checkpoint. The batch
+function returns or yields the batch's versioned commits in order, as
+``(table_root, frame, mode, stats_cols, tag)``, and ``_ingest`` commits
+each through ``versioned.commit_version`` with
+``txn_id = f"{tag}:{checkpoint}:{batch_id}"``.
+
+Exactly-once is checkpoint + IDEMPOTENT sink, not checkpoint alone:
+foreachBatch is at-least-once (a crash after a table commit but before
+the offset commit replays the batch under the same id), so each commit
+carries that txn id and ``commit_version`` turns the replay into a
+no-op returning the already-committed version — the Structured
+Streaming batch-id dedup contract. Version retention must exceed the
+one-batch replay horizon (vacuum keeps >= 1 version). A batch that
+commits several tables can crash between two of them; ingesters whose
+batch reads state they also write (claim tables, upsert logs) scope
+that read to ``batch_id < current`` and commit claim tables last, so
+the replay recomputes bit-identically and the missing commits fill in.
+
 Late/out-of-order data: watermarked windowed aggregation, session
 windows, and ``dropDuplicatesWithinWatermark`` (the streaming twin of
 the batch keep-last dedup, A1). Custom stateful logic goes through
@@ -27,7 +47,7 @@ lacks natively.
 from __future__ import annotations
 
 from pathlib import Path
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -37,8 +57,76 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from incremental_github_data_pipeline_spark.operators import core as ops
+from incremental_github_data_pipeline_spark.sources import versioned
 from incremental_github_data_pipeline_spark.sources.writers import write_rotating
 from incremental_github_data_pipeline_spark.sources.local import local_rows_df
+
+
+def _ingest(
+    stream: DataFrame,
+    checkpoint: str | Path,
+    batch_fn: Callable[[DataFrame, int], Iterable[tuple] | None],
+) -> None:
+    """Run ``batch_fn`` on every micro-batch of ``stream`` available
+    now, then return; rerunning after new files land processes only
+    the new files. The commits ``batch_fn`` returns or yields go
+    through ``versioned.commit_version`` in order, as they come, so
+    work between two yields runs after the earlier commit."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        for root, frame, mode, stats_cols, tag in (
+            batch_fn(batch_df, batch_id) or ()
+        ):
+            versioned.commit_version(
+                frame,
+                root,
+                mode=mode,
+                stats_cols=stats_cols,
+                txn_id=f"{tag}:{checkpoint}:{batch_id}",
+            )
+
+    (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _nonempty(batch_fn):
+    """Skip empty micro-batches (one ``take(1)`` job) before
+    ``batch_fn`` runs."""
+
+    def guarded(batch_df: DataFrame, batch_id: int):
+        return batch_fn(batch_df, batch_id) if batch_df.take(1) else None
+
+    return guarded
+
+
+def _as_list(cols) -> list[str]:
+    """One column name or an iterable of them (None: none)."""
+    return [cols] if isinstance(cols, str) else list(cols or [])
+
+
+def _no_labels(frame: DataFrame, id_col: str) -> DataFrame:
+    """An empty ``(id, component)`` labeling typed like ``id_col``."""
+    return (
+        frame.select(F.col(id_col).alias("id"))
+        .limit(0)
+        .withColumn("component", F.col("id"))
+    )
+
+
+def _last_per(log: DataFrame, key: str, cols: list[str]) -> DataFrame:
+    """Last-writer-wins fold of an upsert log: the highest-``_seq`` row
+    per ``key`` (one window over the log)."""
+    w = Window.partitionBy(key).orderBy(F.col("_seq").desc())
+    return (
+        log.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select(*cols)
+    )
 
 
 def stream_json_dir(
@@ -99,9 +187,8 @@ def run_incremental_github(
 ) -> None:
     """Entry point 2 upgraded to incremental: stream the repos raw zone,
     run the batch cleaners per micro-batch, MERGE each output table on
-    its uuid5 key. ``availableNow`` processes the current directory
-    contents exactly once (checkpointed), then returns — rerunning after
-    new files land processes only the new files.
+    its uuid5 key (no versioned commits; the keyed merge is the
+    idempotent sink).
 
     Fan-in note: issues/branches join the repos dim *of their batch*;
     with per-entity directories landing together (the reference's layout)
@@ -134,13 +221,7 @@ def run_incremental_github(
                 spark, gh.clean_users(issues), out_dir, "users_clean", ["user_id"]
             )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint_dir, process)
 
 
 # ---------------------------------------------------------------------------
@@ -729,7 +810,8 @@ def run_incremental_curation(
     Each batch appends one audit line per funnel stage (raw → quality
     → lang → new) to ``audit_log`` — the reference's counts-per-stage
     observability contract (transform.py:121,140-143) on the streaming
-    path.
+    path. The merge is the idempotent sink; nothing commits to the
+    versioned store.
     """
     from incremental_github_data_pipeline_spark.operators import text as tx
     from incremental_github_data_pipeline_spark.operators.dedup import (
@@ -793,13 +875,7 @@ def run_incremental_curation(
         passed.unpersist()
         in_lang.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint_dir, process)
 
 
 def run_incremental_curation_funnel(
@@ -843,14 +919,11 @@ def run_incremental_curation_funnel(
     keep-first order, the streaming analogue of (payload, record)
     order when shards land in payload order.
 
-    Exactly-once: every table commit carries
-    ``txn_id = cur-funnel-<table>:<checkpoint>:<batch_id>`` so
-    replayed batches are no-ops — including replays after a
-    MID-BATCH crash (ADVICE r13): claim rows carry the batch that
+    Txn tags ``cur-funnel-<table>``. Claim rows carry the batch that
     claimed them and ``drop_claimed`` reads only ``batch_id <
-    current``, so a replay never sees the crashed attempt's own
-    partial claims and recomputes bit-identically; output tables
-    also commit BEFORE claim tables. Tables under ``table_root``:
+    current``, and output tables commit BEFORE claim tables, so a
+    replay after a MID-BATCH crash (ADVICE r13) recomputes
+    bit-identically. Tables under ``table_root``:
     ``curated`` (payload_id, record_idx, url, text, n_tokens),
     ``url_state`` (url, batch_id), ``sent_state`` (sentence,
     batch_id), ``audit`` (batch_id, stage_idx, stage, n_rows,
@@ -860,11 +933,6 @@ def run_incremental_curation_funnel(
     from incremental_github_data_pipeline_spark.operators import text as tx
     from incremental_github_data_pipeline_spark.operators.skew import (
         salted_keep_first,
-    )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
     )
 
     stream = spark.readStream.schema(
@@ -885,10 +953,10 @@ def run_incremental_curation_funnel(
         attempt landed, and every per-table txn_id then no-ops or
         fills the gap. Exactly-once holds across a mid-batch crash,
         not just across whole-batch replays."""
-        if latest_version(state_root) is None:
+        if versioned.latest_version(state_root) is None:
             return batch
         state = (
-            read_version(spark, state_root)
+            versioned.read_version(spark, state_root)
             .filter(F.col("batch_id") < F.lit(batch_id))
             .select(key)
         )
@@ -899,9 +967,8 @@ def run_incremental_curation_funnel(
         )
         return batch.join(F.broadcast(collided), key, "left_anti")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         recs = tx.warc_ingest(batch_df).localCheckpoint(eager=True)
         ok = recs.filter(
             (F.col("warc_type") == "response")
@@ -1023,12 +1090,7 @@ def run_incremental_curation_funnel(
             tx.redact_typed(F.col("kept_text")).alias("text"),
             F.col("kept_toks").alias("n_tokens"),
         ).localCheckpoint(eager=True)
-        commit_version(
-            curated,
-            f"{table_root}/curated",
-            mode="append",
-            txn_id=f"cur-funnel-curated:{checkpoint}:{batch_id}",
-        )
+        yield f"{table_root}/curated", curated, "append", None, "cur-funnel-curated"
 
         def audit(idx, name, frame, toks, chars):
             row = frame.agg(
@@ -1072,49 +1134,25 @@ def run_incremental_curation_funnel(
                   F.size(F.split("text", " ")).cast("long"),
                   F.col("text")),
         ]
-        commit_version(
-            local_rows_df(
-                spark,
-                rows,
-                "batch_id long, stage_idx long, stage string, "
-                "n_rows long, n_tokens long, n_chars long",
-            ),
-            f"{table_root}/audit",
-            mode="append",
-            txn_id=f"cur-funnel-audit:{checkpoint}:{batch_id}",
+        audit_rows = local_rows_df(
+            spark,
+            rows,
+            "batch_id long, stage_idx long, stage string, "
+            "n_rows long, n_tokens long, n_chars long",
         )
+        yield f"{table_root}/audit", audit_rows, "append", None, "cur-funnel-audit"
         # claim tables commit LAST (ADVICE r13): outputs above derive
         # from pre-claim state, and drop_claimed scopes reads to
         # batch_id < current, so a crash between ANY two commits here
         # replays to a bit-identical recompute — committed tables
         # no-op on their txn_id, missing ones fill in.
-        commit_version(
-            kept_docs.select(
-                "url", F.lit(batch_id).cast("long").alias("batch_id")
-            ),
-            f"{table_root}/url_state",
-            mode="append",
-            txn_id=f"cur-funnel-url:{checkpoint}:{batch_id}",
-        )
-        commit_version(
-            kept_sents.select("sentence")
-            .distinct()
-            .select(
-                "sentence",
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            ),
-            f"{table_root}/sent_state",
-            mode="append",
-            txn_id=f"cur-funnel-sent:{checkpoint}:{batch_id}",
-        )
+        claim = F.lit(batch_id).cast("long").alias("batch_id")
+        urls = kept_docs.select("url", claim)
+        yield f"{table_root}/url_state", urls, "append", None, "cur-funnel-url"
+        new_sents = kept_sents.select("sentence").distinct().select("sentence", claim)
+        yield f"{table_root}/sent_state", new_sents, "append", None, "cur-funnel-sent"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def run_incremental_cdc_ingest(
@@ -1140,28 +1178,21 @@ def run_incremental_cdc_ingest(
     one-shot distinct-chunk volume of the union corpus exactly.
 
     O(batch) work and O(new chunks) appended state at any corpus
-    size; exactly-once via per-table txn ids, and crash-safe across
-    a MID-BATCH failure (ADVICE r13): claim rows carry their batch
-    id and the claimed-scan reads only ``batch_id < current``, so a
-    replay recomputes bit-identically whichever commits landed; the
-    ledger commits before the claim table. Tables under
+    size. Txn tags ``cdc-ledger`` and ``cdc-state``; claim rows carry
+    their batch id, the claimed-scan reads only ``batch_id <
+    current`` and the ledger commits before the claim table (ADVICE
+    r13). Tables under
     ``table_root``: ``chunk_state`` (h1, h2, n_chars, batch_id),
     ``ledger`` (batch_id, n_chunks_in, n_new, chars_in,
     chars_new)."""
     from incremental_github_data_pipeline_spark.operators import text as tx
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
     stream = spark.readStream.schema(
         "doc_id long, text string"
     ).parquet(str(docs_dir))
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         chunks = tx.cdc_chunk_rows(
             batch_df.repartition(spark.sparkContext.defaultParallelism)
         ).select(
@@ -1173,11 +1204,11 @@ def run_incremental_cdc_ingest(
             F.first("n_chars").alias("n_chars")
         )
         state_root = f"{table_root}/chunk_state"
-        if latest_version(state_root) is not None:
+        if versioned.latest_version(state_root) is not None:
             # claims scoped to batch_id < current (ADVICE r13): a
             # replayed batch never sees its own partial claims, so
             # the recompute is bit-identical across a mid-batch crash
-            state = read_version(spark, state_root).filter(
+            state = versioned.read_version(spark, state_root).filter(
                 F.col("batch_id") < F.lit(batch_id)
             )
             batch_keys = batch_distinct.select("h1", "h2")
@@ -1200,42 +1231,26 @@ def run_incremental_cdc_ingest(
             .cast("long")
             .alias("chars_new"),
         ).collect()[0]
-        commit_version(
-            local_rows_df(
-                spark,
-                [
-                    (
-                        batch_id,
-                        totals["n_chunks_in"],
-                        news["n_new"],
-                        totals["chars_in"],
-                        news["chars_new"],
-                    )
-                ],
-                "batch_id long, n_chunks_in long, n_new long, "
-                "chars_in long, chars_new long",
-            ),
-            f"{table_root}/ledger",
-            mode="append",
-            txn_id=f"cdc-ledger:{checkpoint}:{batch_id}",
+        ledger = local_rows_df(
+            spark,
+            [
+                (
+                    batch_id,
+                    totals["n_chunks_in"],
+                    news["n_new"],
+                    totals["chars_in"],
+                    news["chars_new"],
+                )
+            ],
+            "batch_id long, n_chunks_in long, n_new long, "
+            "chars_in long, chars_new long",
         )
+        yield f"{table_root}/ledger", ledger, "append", None, "cdc-ledger"
         # claim table LAST (ADVICE r13) — see the funnel's twin note
-        commit_version(
-            fresh.withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            ),
-            state_root,
-            mode="append",
-            txn_id=f"cdc-state:{checkpoint}:{batch_id}",
-        )
+        claims = fresh.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        yield state_root, claims, "append", None, "cdc-state"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def apply_changelog(
@@ -1372,13 +1387,7 @@ def run_incremental_to_warehouse(
             gh.repos_for_warehouse(repos), "repos", ["repo_id"]
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint_dir, process)
 
 
 def running_totals_tws(events: DataFrame, user_col: str = "user_id") -> DataFrame:
@@ -1526,22 +1535,9 @@ def run_incremental_text_ingest(
     layout; `operators.text.gzip_ingest`), and append each micro-batch
     to a manifest-versioned table. Every batch is a table version, so a
     bad shard's ingestion can be time-traveled around. Decode runs
-    where the bytes land, no shuffle.
-
-    Exactly-once is checkpoint + IDEMPOTENT sink, not checkpoint
-    alone: foreachBatch is at-least-once (a crash after the version
-    commit but before the offset commit replays the batch), so each
-    commit carries ``txn_id = <checkpoint>:<batch_id>`` and
-    ``commit_version`` turns the replay into a no-op returning the
-    already-committed version — the Structured Streaming docs'
-    batch-id-based dedup contract. Version retention must exceed the
-    one-batch replay horizon (it does: vacuum keeps ≥1 version)."""
-    from pyspark.sql import functions as F
-
+    where the bytes land, no shuffle. Txn tag ``text-ingest``; a batch
+    that decodes to no documents commits nothing."""
     from incremental_github_data_pipeline_spark.operators.text import gzip_ingest
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
 
     stream = (
         spark.readStream.format("binaryFile")
@@ -1556,25 +1552,15 @@ def run_incremental_text_ingest(
         .select(F.col("path").alias("shard"), F.col("content").alias("payload"))
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: int):
         docs = gzip_ingest(
             batch_df, payload_col="payload", id_col="shard", on_error=on_error
         )
         if docs.take(1):
-            commit_version(
-                docs.withColumn("n_chars", F.length("text").cast("long")),
-                table_root,
-                mode="append",
-                txn_id=f"text-ingest:{checkpoint}:{batch_id}",
-            )
+            docs = docs.withColumn("n_chars", F.length("text").cast("long"))
+            yield table_root, docs, "append", None, "text-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def run_incremental_index_ingest(
@@ -1600,28 +1586,21 @@ def run_incremental_index_ingest(
     ever touched by the query-term equi-join, never re-aggregated at
     serving time.
 
-    Exactly-once follows run_incremental_text_ingest: foreachBatch is
-    at-least-once, so each of the four commits carries
-    ``txn_id = index-<table>:<checkpoint>:<batch_id>`` and a replayed
-    batch becomes a no-op returning the committed version. Postings
-    commits record per-file term min/max bounds (``stats_cols``), so a
-    query-term search can file-skip before any parquet opens.
+    Txn tags ``index-<table>``. Postings commits record per-file term
+    min/max bounds (``stats_cols``), so a query-term search can
+    file-skip before any parquet opens.
 
     Serving: :func:`bm25_search_versioned` — same scoring lane as
     ``operators.text.bm25_topk``; ``version`` time-travels the search
     to an earlier index state."""
     from incremental_github_data_pipeline_spark.operators.text import tokens
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(
         src_dir
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         toks = batch_df.select(
             "doc_id", F.explode(tokens(F.col("text"))).alias("term")
         )
@@ -1630,55 +1609,38 @@ def run_incremental_index_ingest(
             .agg(F.count(F.lit(1)).alias("tf"))
             .localCheckpoint(eager=True)  # one tokenize per batch
         )
-        commit_version(
-            tf.select("term", "doc_id", "tf"),
-            f"{table_root}/postings",
-            mode="append",
-            stats_cols=["term"],
-            txn_id=f"index-postings:{checkpoint}:{batch_id}",
+        postings = tf.select("term", "doc_id", "tf")
+        yield (
+            f"{table_root}/postings", postings, "append", ["term"], "index-postings"
         )
-        commit_version(
-            tf.groupBy("term").agg(
-                F.count(F.lit(1)).alias("df_delta"),
-                F.sum("tf").alias("tf_delta"),
-            ),
-            f"{table_root}/termstats",
-            mode="append",
-            txn_id=f"index-termstats:{checkpoint}:{batch_id}",
+        termstats = tf.groupBy("term").agg(
+            F.count(F.lit(1)).alias("df_delta"),
+            F.sum("tf").alias("tf_delta"),
+        )
+        yield (
+            f"{table_root}/termstats", termstats, "append", None, "index-termstats"
         )
         # Per-doc lengths, committed in the same lockstep so serving
         # never has to rebuild them from the token-level postings (a
         # corpus-sized shuffle per search at 100 TB). O(batch): docs
         # only ever appear in one batch, so append is exact.
-        commit_version(
-            tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
-            f"{table_root}/doclens",
-            mode="append",
-            txn_id=f"index-doclens:{checkpoint}:{batch_id}",
-        )
+        doclens = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+        yield f"{table_root}/doclens", doclens, "append", None, "index-doclens"
         n_docs = batch_df.count()
         total_len = (
             tf.agg(F.coalesce(F.sum("tf"), F.lit(0)).alias("t"))
             .collect()[0]["t"]
         )
-        commit_version(
-            local_rows_df(
-                spark,
-                [(int(batch_id), int(n_docs), int(total_len))],
-                "batch_id long, n_docs long, total_len long",
-            ),
-            f"{table_root}/docstats",
-            mode="append",
-            txn_id=f"index-docstats:{checkpoint}:{batch_id}",
+        docstats = local_rows_df(
+            spark,
+            [(int(batch_id), int(n_docs), int(total_len))],
+            "batch_id long, n_docs long, total_len long",
+        )
+        yield (
+            f"{table_root}/docstats", docstats, "append", None, "index-docstats"
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def bm25_search_versioned(
@@ -1708,9 +1670,9 @@ def bm25_search_versioned(
     all four tables for a consistent time-traveled view ONLY when they
     were committed in lockstep (one version per batch per table, as
     the ingester does)."""
-    from incremental_github_data_pipeline_spark.operators.text import tokens
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
+    from incremental_github_data_pipeline_spark.operators.text import (
+        bm25_rank_hits,
+        tokens,
     )
 
     qterms = queries.select(
@@ -1719,57 +1681,31 @@ def bm25_search_versioned(
     term_list = sorted(
         r["term"] for r in qterms.select("term").distinct().collect()
     )
-    postings = read_version(
+    postings = versioned.read_version(
         spark,
         f"{table_root}/postings",
         version,
         skip_values=("term", term_list) if term_list else None,
     )
     termstats = (
-        read_version(spark, f"{table_root}/termstats", version)
+        versioned.read_version(spark, f"{table_root}/termstats", version)
         .groupBy("term")
         .agg(F.sum("df_delta").alias("df"))
     )
-    doc_tot = read_version(spark, f"{table_root}/docstats", version).agg(
+    doc_tot = versioned.read_version(
+        spark, f"{table_root}/docstats", version
+    ).agg(
         F.sum("n_docs").alias("_n"),
         (F.sum("total_len") / F.sum("n_docs")).alias("_avgdl"),
     )
-    dl = read_version(spark, f"{table_root}/doclens", version)
+    dl = versioned.read_version(spark, f"{table_root}/doclens", version)
     hits = (
         qterms.join(postings, "term")
         .join(termstats, "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(doc_tot))
-        .withColumn(
-            "_idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("_n") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "_s",
-            F.col("_idf")
-            * (F.col("tf") * F.lit(k1 + 1.0))
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("_avgdl"))
-            ),
-        )
     )
-    scored = hits.groupBy(qid_col, "doc_id").agg(
-        F.count(F.lit(1)).alias("n_terms"),
-        F.sum("tf").alias("sum_tf"),
-        F.sum("_s").alias("score"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", "doc_id", "n_terms", "sum_tf", "score")
-    )
+    return bm25_rank_hits(hits, qid_col, "doc_id", k, k1, b)
 
 
 def run_incremental_ann_ingest(
@@ -1793,18 +1729,13 @@ def run_incremental_ann_ingest(
     break ADC score comparability — the classic drifting-index bug).
 
     Encode is the Arrow map-side path (no shuffle; vectors never leave
-    the task that read them); exactly-once is checkpoint + idempotent
-    commit (``txn_id = ann-ingest:<checkpoint>:<batch_id>``), the same
-    contract as :func:`run_incremental_text_ingest`. Search the
+    the task that read them); txn tag ``ann-ingest``. Search the
     result with :func:`ann_search_versioned`."""
     from incremental_github_data_pipeline_spark.operators.similarity import (
         load_pq_codebooks,
         pq_encode_arrow,
         pq_train,
         save_pq_codebooks,
-    )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
     )
 
     stream = (
@@ -1813,9 +1744,8 @@ def run_incremental_ann_ingest(
         .json(src_dir)
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         if Path(model_path).exists():
             codebooks = load_pq_codebooks(spark, model_path)
         else:
@@ -1824,20 +1754,9 @@ def run_incremental_ann_ingest(
             )
             save_pq_codebooks(spark, codebooks, model_path)
         enc = pq_encode_arrow(batch_df, "embedding", "vec_id", codebooks)
-        commit_version(
-            enc,
-            table_root,
-            mode="append",
-            txn_id=f"ann-ingest:{checkpoint}:{batch_id}",
-        )
+        yield table_root, enc, "append", None, "ann-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def ann_search_versioned(
@@ -1859,11 +1778,8 @@ def ann_search_versioned(
     from incremental_github_data_pipeline_spark.operators.similarity import (
         l2_normalize,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
-    enc = read_version(spark, table_root, version=version)
+    enc = versioned.read_version(spark, table_root, version=version)
     qn = queries.select(F.col(query_id), l2_normalize(vec_col).alias("_qv"))
     scored = enc.crossJoin(F.broadcast(qn)).select(
         query_id,
@@ -1957,25 +1873,21 @@ def compact_index(
     time travel consistent is preserved (every table advances by one).
     Old versions stay readable; ``versioned.vacuum`` reclaims the
     small pre-compaction parts once out of retention."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        compact,
-    )
-
     return {
-        "postings": compact(
+        "postings": versioned.compact(
             spark,
             f"{table_root}/postings",
             target_partitions=target_partitions,
             cluster_cols=["term"],
         ),
-        "doclens": compact(
+        "doclens": versioned.compact(
             spark,
             f"{table_root}/doclens",
             target_partitions=target_partitions,
             cluster_cols=["doc_id"],
         ),
-        "termstats": compact(spark, f"{table_root}/termstats"),
-        "docstats": compact(spark, f"{table_root}/docstats"),
+        "termstats": versioned.compact(spark, f"{table_root}/termstats"),
+        "docstats": versioned.compact(spark, f"{table_root}/docstats"),
     }
 
 
@@ -2003,46 +1915,27 @@ def run_incremental_hll_ingest(
     size, and exact-replay determinism survives because the register
     table is integer arithmetic end-to-end.
 
-    Exactly-once: foreachBatch is at-least-once, so each commit
-    carries ``txn_id = hll-ingest:<checkpoint>:<batch_id>`` and a
-    replayed batch is a no-op. Commits use ``mode="overwrite"``
-    (the state is a snapshot, not a log), so every version is a
-    consistent time-traveled sketch of the stream so far; max-merge
-    idempotence means even a torn retry that re-merges an already-
-    folded batch cannot change the state. Serving: ``read_version`` +
+    Txn tag ``hll-ingest``. Commits use ``mode="overwrite"`` (the
+    state is a snapshot, not a log), so every version is a consistent
+    time-traveled sketch of the stream so far; max-merge idempotence
+    means even a torn retry that re-merges an already-folded batch
+    cannot change the state. Serving: ``read_version`` +
     ``hll_estimate`` at any version."""
     from incremental_github_data_pipeline_spark.operators.incremental_agg import (
         hll_merge,
         hll_registers,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         regs = hll_registers(batch_df, group_col, key_col, p=p)
-        if latest_version(table_root) is not None:
-            regs = hll_merge(read_version(spark, table_root), regs)
-        commit_version(
-            regs,
-            table_root,
-            mode="overwrite",
-            txn_id=f"hll-ingest:{checkpoint}:{batch_id}",
-        )
+        if versioned.latest_version(table_root) is not None:
+            regs = hll_merge(versioned.read_version(spark, table_root), regs)
+        yield table_root, regs, "overwrite", None, "hll-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def run_incremental_drift_ingest(
@@ -2066,19 +1959,13 @@ def run_incremental_drift_ingest(
     the same deltas-never-re-join-full-tables discipline as the BM25
     termstats table.
 
-    Exactly-once: ``txn_id = drift-ingest:<checkpoint>:<batch_id>``
-    makes replays no-ops. Late data is handled by construction — a
+    Txn tag ``drift-ingest``. Late data is handled by construction — a
     late row just lands its deltas in a later version, and the fold
     is order-independent because addition commutes."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
-
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         keyed = batch_df.select(
             F.col(window_col).alias("win"),
             F.json_object_keys(F.col(json_col)).alias("_keys"),
@@ -2104,20 +1991,9 @@ def run_incremental_drift_ingest(
                 "d_present",
             )
         )
-        commit_version(
-            rows.unionByName(present),
-            table_root,
-            mode="append",
-            txn_id=f"drift-ingest:{checkpoint}:{batch_id}",
-        )
+        yield table_root, rows.unionByName(present), "append", None, "drift-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def drift_report_versioned(
@@ -2135,11 +2011,7 @@ def drift_report_versioned(
     must serve the identical report to a one-shot batch run (pinned in
     tests). ``version`` time-travels the report to an earlier ingest
     state."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    deltas = read_version(spark, table_root, version=version)
+    deltas = versioned.read_version(spark, table_root, version=version)
     per_win = (
         deltas.filter(F.col("key").isNull())
         .groupBy("win")
@@ -2208,36 +2080,19 @@ def run_incremental_tcloseness_ingest(
     privacy release gate becomes continuously maintained instead of
     recomputed from the fact table per release.
 
-    Exactly-once: ``txn_id = tclose-ingest:<checkpoint>:<batch_id>``
-    makes replays no-ops; late rows land their deltas in a later
+    Txn tag ``tclose-ingest``; late rows land their deltas in a later
     version and the fold commutes (addition)."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
-
-    quasi = [quasi_cols] if isinstance(quasi_cols, str) else list(quasi_cols)
+    quasi = _as_list(quasi_cols)
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         deltas = batch_df.groupBy(*quasi, sensitive_col).agg(
             F.count(F.lit(1)).alias("d_c")
         )
-        commit_version(
-            deltas,
-            table_root,
-            mode="append",
-            txn_id=f"tclose-ingest:{checkpoint}:{batch_id}",
-        )
+        yield table_root, deltas, "append", None, "tclose-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def t_closeness_versioned(
@@ -2261,13 +2116,10 @@ def t_closeness_versioned(
     from incremental_github_data_pipeline_spark.operators.privacy import (
         t_closeness_from_counts,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
-    quasi = [quasi_cols] if isinstance(quasi_cols, str) else list(quasi_cols)
+    quasi = _as_list(quasi_cols)
     counts = (
-        read_version(spark, table_root, version=version)
+        versioned.read_version(spark, table_root, version=version)
         .groupBy(*quasi, sensitive_col)
         .agg(F.sum("d_c").alias("_c"))
         .localCheckpoint(eager=True)  # the from_counts consumers fold it
@@ -2293,36 +2145,19 @@ def run_incremental_volume_ingest(
     + O(batch's windows × keys); :func:`volume_gate_versioned` folds
     the log at serving time, so the ingest-freshness breaker runs on
     continuously maintained counts instead of re-scanning the fact
-    table per check. Exactly-once via
-    ``txn_id = volume-ingest:<checkpoint>:<batch_id>``; a late row
-    lands its delta in a later version and the fold commutes."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-    )
-
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols or [])
+    table per check. Txn tag ``volume-ingest``; a late row lands its
+    delta in a later version and the fold commutes."""
+    keys = _as_list(key_cols)
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         deltas = batch_df.groupBy(*keys, window_col).agg(
             F.count(F.lit(1)).alias("d_rows")
         )
-        commit_version(
-            deltas,
-            table_root,
-            mode="append",
-            txn_id=f"volume-ingest:{checkpoint}:{batch_id}",
-        )
+        yield table_root, deltas, "append", None, "volume-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def volume_gate_versioned(
@@ -2346,13 +2181,10 @@ def volume_gate_versioned(
     from incremental_github_data_pipeline_spark.operators.quality import (
         volume_gate_from_counts,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols or [])
+    keys = _as_list(key_cols)
     counts = (
-        read_version(spark, table_root, version=version)
+        versioned.read_version(spark, table_root, version=version)
         .groupBy(*keys, window_col)
         .agg(F.sum("d_rows").alias("n_rows"))
     )
@@ -2385,43 +2217,24 @@ def run_incremental_kmv_ingest(
     ``read_version`` + ``kmv_estimate`` (integer-exact) or
     ``kmv_jaccard`` between groups at any version.
 
-    Exactly-once: ``txn_id = kmv-ingest:<checkpoint>:<batch_id>``
-    makes replayed batches no-ops; overwrite commits keep every
-    version a consistent snapshot, and merge idempotence means a torn
-    retry that re-folds an already-merged batch cannot change the
-    state."""
+    Txn tag ``kmv-ingest``; overwrite commits keep every version a
+    consistent snapshot, and merge idempotence means a torn retry that
+    re-folds an already-merged batch cannot change the state."""
     from incremental_github_data_pipeline_spark.operators.incremental_agg import (
         kmv_merge,
         kmv_sketch,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
-    )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         sk = kmv_sketch(batch_df, group_col, key_col, k=k)
-        if latest_version(table_root) is not None:
-            sk = kmv_merge(read_version(spark, table_root), sk, k=k)
-        commit_version(
-            sk,
-            table_root,
-            mode="overwrite",
-            txn_id=f"kmv-ingest:{checkpoint}:{batch_id}",
-        )
+        if versioned.latest_version(table_root) is not None:
+            sk = kmv_merge(versioned.read_version(spark, table_root), sk, k=k)
+        yield table_root, sk, "overwrite", None, "kmv-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def run_incremental_profile_ingest(
@@ -2445,35 +2258,20 @@ def run_incremental_profile_ingest(
     everything ingested — the always-fresh data-quality dashboard
     primitive.
 
-    Exactly-once: ``txn_id = profile-ingest:<checkpoint>:<batch_id>``
-    makes replays no-ops; late data just lands its deltas in a later
-    version (addition commutes)."""
+    Txn tag ``profile-ingest``; late data just lands its deltas in a
+    later version (addition commutes)."""
     from incremental_github_data_pipeline_spark.operators.quality import (
         profile_histogram,
-    )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
     )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        commit_version(
-            profile_histogram(batch_df, cols),
-            table_root,
-            mode="append",
-            txn_id=f"profile-ingest:{checkpoint}:{batch_id}",
-        )
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
+        hist = profile_histogram(batch_df, cols)
+        yield table_root, hist, "append", None, "profile-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def profile_versioned(
@@ -2482,16 +2280,11 @@ def profile_versioned(
     """Serve the column profile at any version: fold the histogram
     delta log by sum, finish through the shared lanes. O(distinct
     values in the log), never re-reads raw data."""
-    from pyspark.sql import functions as F
-
     from incremental_github_data_pipeline_spark.operators.quality import (
         profile_from_hist,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
-    log = read_version(spark, table_root, version=version)
+    log = versioned.read_version(spark, table_root, version=version)
     hist = log.groupBy("column", "_v").agg(F.sum("_n").alias("_n"))
     return profile_from_hist(hist)
 
@@ -2527,23 +2320,18 @@ def run_incremental_cc_ingest(
     Per-batch cost: one column-pruned fold-read of the label log (the
     versioned store's compaction keeps it proportional to live
     nodes), O(batch) contraction + batch-sized CC, O(affected)
-    append. Exactly-once: ``txn_id = cc-ingest:<checkpoint>:
-    <batch_id>`` makes replayed batches no-ops, and the upsert log is
-    insensitive to re-appending an identical relabeling (last-writer
-    -wins serving folds duplicates away)."""
+    append; a batch that changes no label commits nothing. Txn tag
+    ``cc-ingest``; the upsert log is insensitive to re-appending an
+    identical relabeling (last-writer-wins serving folds duplicates
+    away)."""
     from incremental_github_data_pipeline_spark.operators.dedup import (
         connected_components,
-    )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
     )
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         edges = (
             batch_df.select(
                 F.col(id_a).alias("_a"), F.col(id_b).alias("_b")
@@ -2551,16 +2339,12 @@ def run_incremental_cc_ingest(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        if latest_version(table_root) is not None:
+        if versioned.latest_version(table_root) is not None:
             cur = cc_versioned(spark, table_root).localCheckpoint(
                 eager=True
             )
         else:
-            cur = (
-                edges.select(F.col("_a").alias("id"))
-                .limit(0)
-                .withColumn("component", F.col("id"))
-            )
+            cur = _no_labels(edges, "_a")
         # resolve batch endpoints through the current labeling; a node
         # the state has never seen labels itself
         la = edges.join(
@@ -2590,9 +2374,7 @@ def run_incremental_cc_ingest(
                 contracted, "id_a", "id_b"
             ).localCheckpoint(eager=True)
         else:
-            sup = both.select(F.col("la").alias("id")).limit(
-                0
-            ).withColumn("component", F.col("id"))
+            sup = _no_labels(both, "la")
         relabel = sup.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias("_old"), F.col("component").alias("_new")
         )
@@ -2618,22 +2400,10 @@ def run_incremental_cc_ingest(
         upserts = changed_members.unionByName(new_rows).withColumn(
             "_seq", F.lit(batch_id).cast("long")
         )
-        if not upserts.take(1):
-            return
-        commit_version(
-            upserts,
-            table_root,
-            mode="append",
-            txn_id=f"cc-ingest:{checkpoint}:{batch_id}",
-        )
+        if upserts.take(1):
+            yield table_root, upserts, "append", None, "cc-ingest"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def cc_versioned(
@@ -2645,19 +2415,8 @@ def cc_versioned(
     ``(id, component)``, bit-identical to
     ``dedup.connected_components`` over every edge ingested up to
     ``version``."""
-    from pyspark.sql import Window
-
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    log = read_version(spark, table_root, version=version)
-    w = Window.partitionBy("id").orderBy(F.col("_seq").desc())
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("id", "component")
-    )
+    log = versioned.read_version(spark, table_root, version=version)
+    return _last_per(log, "id", ["id", "component"])
 
 
 def run_incremental_keep_best_ingest(
@@ -2697,35 +2456,19 @@ def run_incremental_keep_best_ingest(
     are algebraic (sum / max are associative over the merged sets),
     which is the whole point of the composition.
 
-    Exactly-once via ``txn_id = keep-best:<checkpoint>:<batch_id>``.
-    Contract: doc ids are unique across all batches (each doc counts
-    once), and ``id_col`` is integral (the keep_best tie-break)."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-    )
-
+    Txn tag ``keep-best``. Contract: doc ids are unique across all
+    batches (each doc counts once), and ``id_col`` is integral (the
+    keep_best tie-break)."""
     stream = spark.readStream.schema(schema).parquet(docs_dir)
 
-    def best_key(prefix: F.Column | None = None):
-        s = prefix[score_col] if prefix is not None else F.col(score_col)
-        i = prefix[id_col] if prefix is not None else F.col(id_col)
-        return F.struct(
-            s.alias("_s"),
-            (-i.cast("decimal(38,0)")).alias("_negid"),
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
         docs = batch_df.localCheckpoint(eager=True)
         doc_cols = docs.columns
-        if latest_version(cc_root) is not None:
+        if versioned.latest_version(cc_root) is not None:
             labels = cc_versioned(spark, cc_root)
         else:
-            labels = docs.select(F.col(id_col).alias("id")).limit(
-                0
-            ).withColumn("component", F.col("id"))
+            labels = _no_labels(docs, id_col)
         labeled = docs.join(
             labels.withColumnRenamed("id", id_col), id_col, "left"
         ).withColumn(
@@ -2733,11 +2476,12 @@ def run_incremental_keep_best_ingest(
         )
         batch_best = labeled.groupBy("component").agg(
             F.max_by(
-                F.struct(*[F.col(c) for c in doc_cols]), best_key()
+                F.struct(*[F.col(c) for c in doc_cols]),
+                _best_key(score_col, id_col),
             ).alias("best"),
             F.count(F.lit(1)).cast("long").alias("n_docs"),
         ).localCheckpoint(eager=True)
-        if latest_version(table_root) is not None:
+        if versioned.latest_version(table_root) is not None:
             prior = _keep_best_fold(
                 spark, table_root, before_seq=batch_id
             ).join(
@@ -2749,28 +2493,27 @@ def run_incremental_keep_best_ingest(
                 batch_best.unionByName(prior)
                 .groupBy("component")
                 .agg(
-                    F.max_by("best", best_key(F.col("best"))).alias(
-                        "best"
-                    ),
+                    F.max_by(
+                        "best", _best_key(score_col, id_col, F.col("best"))
+                    ).alias("best"),
                     F.sum("n_docs").cast("long").alias("n_docs"),
                 )
             )
         else:
             merged = batch_best
-        commit_version(
-            merged.withColumn("_seq", F.lit(batch_id).cast("long")),
-            table_root,
-            mode="append",
-            txn_id=f"keep-best:{checkpoint}:{batch_id}",
-        )
+        upserts = merged.withColumn("_seq", F.lit(batch_id).cast("long"))
+        yield table_root, upserts, "append", None, "keep-best"
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
+
+
+def _best_key(score_col: str, id_col: str, row: F.Column | None = None):
+    """The keep-best argmax key of a doc (its columns, or the fields of
+    the ``row`` struct): highest score, then lowest id (negated as a
+    decimal, so no integral id overflows)."""
+    s = F.col(score_col) if row is None else row[score_col]
+    i = F.col(id_col) if row is None else row[id_col]
+    return F.struct(s.alias("_s"), (-i.cast("decimal(38,0)")).alias("_negid"))
 
 
 def _keep_best_fold(
@@ -2788,21 +2531,10 @@ def _keep_best_fold(
     state instead of folding its own earlier write back in — making
     the recomputed merge bit-identical, the same scoping the funnel
     and CDC ingests apply via ``batch_id < current`` claims."""
-    from pyspark.sql import Window
-
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    log = read_version(spark, table_root, version=version)
+    log = versioned.read_version(spark, table_root, version=version)
     if before_seq is not None:
         log = log.filter(F.col("_seq") < F.lit(int(before_seq)))
-    w = Window.partitionBy("component").orderBy(F.col("_seq").desc())
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("component", "best", "n_docs")
-    )
+    return _last_per(log, "component", ["component", "best", "n_docs"])
 
 
 def keep_best_versioned(
@@ -2828,17 +2560,11 @@ def keep_best_versioned(
     Returns the full best-doc rows plus ``component`` and ``n_docs``,
     bit-identical to ``dedup.keep_best_of_cluster`` over every doc
     and edge ingested up to the given versions."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        latest_version,
-    )
-
     cur = _keep_best_fold(spark, table_root, version=version)
-    if latest_version(cc_root) is not None:
+    if versioned.latest_version(cc_root) is not None:
         labels = cc_versioned(spark, cc_root, version=cc_version)
     else:
-        labels = cur.select(
-            F.col("component").alias("id")
-        ).limit(0).withColumn("component", F.col("id"))
+        labels = _no_labels(cur, "component")
     rekeyed = cur.join(
         labels.select(
             F.col("id").alias("_wid"), F.col("component").alias("_nc")
@@ -2851,34 +2577,41 @@ def keep_best_versioned(
         "n_docs",
     )
     final = rekeyed.groupBy("component").agg(
-        F.max_by(
-            "best",
-            F.struct(
-                F.col("best")[score_col].alias("_s"),
-                (-F.col("best")[id_col].cast("decimal(38,0)")).alias(
-                    "_negid"
-                ),
-            ),
-        ).alias("best"),
+        F.max_by("best", _best_key(score_col, id_col, F.col("best"))).alias(
+            "best"
+        ),
         F.sum("n_docs").cast("long").alias("n_docs"),
     )
     return final.select(F.col("best.*"), "component", "n_docs")
 
 
-def _assert_pinned_params(
-    spark: SparkSession, params_root: str, called: dict, what: str
+def _pin_params(
+    spark: SparkSession,
+    table_root: str,
+    data_table: str,
+    called: dict,
+    txn_id: str,
+    what: str,
 ) -> None:
-    """Guard for parameterized versioned indexes (ADVICE r12): once a
-    ``params`` sidecar is pinned, every later ingest must pass the SAME
-    parameters — appending postings banded under different hash counts
-    (or Bloom positions hashed under a different geometry) silently
-    corrupts the index (zeroed LSH recall / Bloom false negatives).
-    1-row sidecar read: bounded by construction."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    pinned = read_version(spark, params_root).collect()[0]
+    """Pin-or-assert for parameterized versioned indexes: while
+    ``data_table`` is empty, commit the (integer) ``called`` parameters
+    as the 1-row ``params`` sidecar under ``txn_id``. Once pinned, every
+    later ingest must pass the SAME parameters (ADVICE r12) —
+    appending postings banded under different hash counts (or Bloom
+    positions hashed under a different geometry) silently corrupts the
+    index (zeroed LSH recall / Bloom false negatives). 1-row sidecar
+    read: bounded by construction."""
+    params_root = f"{table_root}/params"
+    if versioned.latest_version(f"{table_root}/{data_table}") is None:
+        schema = ", ".join(f"{name} int" for name in called)
+        versioned.commit_version(
+            local_rows_df(spark, [tuple(called.values())], schema),
+            params_root,
+            mode="overwrite",
+            txn_id=txn_id,
+        )
+        return
+    pinned = versioned.read_version(spark, params_root).collect()[0]
     diffs = {
         name: (pinned[name], value)
         for name, value in called.items()
@@ -2922,23 +2655,18 @@ def run_incremental_lsh_ingest(
     a query's bucket probes FILE-SKIP before any parquet opens — the
     same Iceberg-style pruning the BM25 postings use for terms.
 
-    Exactly-once: ``txn_id = lsh-ingest:<checkpoint>:<batch_id>``
-    makes replayed batches no-ops. Serving:
-    :func:`lsh_candidates_versioned` — band the query docs with the
+    Serving: :func:`lsh_candidates_versioned` — band the query docs with the
     SAME parameters and equi-join the postings; parameters are part
     of the index contract (mixing band counts across versions would
     silently zero the collision probability), so they are pinned in a
     1-row ``_params`` sidecar committed with version 1, ENFORCED on
     every later ingest (a re-run with different parameters raises
     instead of silently appending incompatible postings — ADVICE
-    r12), and re-read at serve time."""
+    r12), and re-read at serve time. Txn tags ``lsh-ingest`` per batch
+    and ``lsh-params:<checkpoint>`` for the sidecar."""
     from incremental_github_data_pipeline_spark.operators.dedup import (
         minhash_bands,
         minhash_signature,
-    )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
     )
 
     stream = spark.readStream.schema("doc_id long, text string").parquet(
@@ -2948,27 +2676,16 @@ def run_incremental_lsh_ingest(
     if rows_per_band * bands != num_hashes:
         raise ValueError("bands must divide num_hashes")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        if latest_version(f"{table_root}/postings") is None:
-            commit_version(
-                local_rows_df(
-                    spark,
-                    [(num_hashes, bands, k)],
-                    "num_hashes int, bands int, k int",
-                ),
-                f"{table_root}/params",
-                mode="overwrite",
-                txn_id=f"lsh-params:{checkpoint}",
-            )
-        else:
-            _assert_pinned_params(
-                spark,
-                f"{table_root}/params",
-                {"num_hashes": num_hashes, "bands": bands, "k": k},
-                what="LSH index",
-            )
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
+        _pin_params(
+            spark,
+            table_root,
+            "postings",
+            {"num_hashes": num_hashes, "bands": bands, "k": k},
+            f"lsh-params:{checkpoint}",
+            "LSH index",
+        )
         # signature work is CPU-bound and the micro-batch often arrives
         # as a handful of small files (= a handful of input partitions);
         # spread it across the executors before banding — an O(batch)
@@ -2993,21 +2710,12 @@ def run_incremental_lsh_ingest(
             F.col("_bk.bucket").alias("bucket"),
             "doc_id",
         )
-        commit_version(
-            keys.repartitionByRange(8, "bucket"),
-            f"{table_root}/postings",
-            mode="append",
-            stats_cols=["bucket"],
-            txn_id=f"lsh-ingest:{checkpoint}:{batch_id}",
+        postings = keys.repartitionByRange(8, "bucket")
+        yield (
+            f"{table_root}/postings", postings, "append", ["bucket"], "lsh-ingest"
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def lsh_candidates_versioned(
@@ -3033,11 +2741,8 @@ def lsh_candidates_versioned(
         minhash_bands,
         minhash_signature,
     )
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
 
-    p = read_version(spark, f"{table_root}/params").collect()[0]
+    p = versioned.read_version(spark, f"{table_root}/params").collect()[0]
     rows_per_band = p["num_hashes"] // p["bands"]
     qk = queries.select(
         F.col(qid_col).alias("query_id"),
@@ -3055,7 +2760,9 @@ def lsh_candidates_versioned(
         F.col("_bk.bucket").alias("bucket"),
         "query_id",
     )
-    idx = read_version(spark, f"{table_root}/postings", version=version)
+    idx = versioned.read_version(
+        spark, f"{table_root}/postings", version=version
+    )
     return (
         idx.join(qk, ["band", "bucket"])
         .select("query_id", "doc_id")
@@ -3096,12 +2803,8 @@ def run_incremental_bloom_ingest(
     matching the batch twin ``dedup.build_bloom``'s contract — the
     serving fold packs positions into 64-bit words, so a ragged width
     would otherwise get permanently pinned and break every serve.
-    Exactly-once: ``txn_id = bloom-ingest:<checkpoint>:<batch_id>``."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-    )
-
+    Txn tags ``bloom-ingest`` per batch and ``bloom-params:<checkpoint>``
+    for the sidecar."""
     if n_bits <= 0 or n_bits % 64 != 0:
         raise ValueError("n_bits must be a positive multiple of 64")
     if n_hashes < 1:
@@ -3109,26 +2812,16 @@ def run_incremental_bloom_ingest(
 
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        if latest_version(f"{table_root}/positions") is None:
-            commit_version(
-                local_rows_df(
-                    spark,
-                    [(n_bits, n_hashes)], "n_bits int, n_hashes int"
-                ),
-                f"{table_root}/params",
-                mode="overwrite",
-                txn_id=f"bloom-params:{checkpoint}",
-            )
-        else:
-            _assert_pinned_params(
-                spark,
-                f"{table_root}/params",
-                {"n_bits": n_bits, "n_hashes": n_hashes},
-                what="Bloom filter",
-            )
+    @_nonempty
+    def process(batch_df: DataFrame, batch_id: int):
+        _pin_params(
+            spark,
+            table_root,
+            "positions",
+            {"n_bits": n_bits, "n_hashes": n_hashes},
+            f"bloom-params:{checkpoint}",
+            "Bloom filter",
+        )
         positions = batch_df.select(
             F.explode(
                 F.array(
@@ -3142,20 +2835,11 @@ def run_incremental_bloom_ingest(
                 )
             ).alias("p")
         ).distinct()
-        commit_version(
-            positions,
-            f"{table_root}/positions",
-            mode="append",
-            txn_id=f"bloom-ingest:{checkpoint}:{batch_id}",
+        yield (
+            f"{table_root}/positions", positions, "append", None, "bloom-ingest"
         )
 
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _ingest(stream, checkpoint, process)
 
 
 def bloom_versioned(
@@ -3166,13 +2850,11 @@ def bloom_versioned(
     ``dedup.bloom_might_contain``. The fold is a distinct over the
     position log — ≤ ``n_bits`` rows whatever the corpus size, the
     same bounded-model collect class as the filter itself."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        read_version,
-    )
-
-    p = read_version(spark, f"{table_root}/params").collect()[0]
+    p = versioned.read_version(spark, f"{table_root}/params").collect()[0]
     rows = (
-        read_version(spark, f"{table_root}/positions", version=version)
+        versioned.read_version(
+            spark, f"{table_root}/positions", version=version
+        )
         .distinct()
         .collect()
     )
@@ -3218,24 +2900,11 @@ def compact_cc_log(spark: SparkSession, table_root: str) -> int:
     log is identical by construction (the fold is idempotent); older
     versions stay time-travelable; OCC pins the tip so a concurrent
     ingest raises instead of being dropped."""
-    from incremental_github_data_pipeline_spark.sources.versioned import (
-        commit_version,
-        latest_version,
-        read_version,
-    )
-
-    cur = latest_version(table_root)
+    cur = versioned.latest_version(table_root)
     if cur is None:
         raise ValueError("cannot compact an empty CC log")
-    from pyspark.sql import Window
-
-    log = read_version(spark, table_root, version=cur)
-    w = Window.partitionBy("id").orderBy(F.col("_seq").desc())
-    folded = (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("id", "component", "_seq")
-    )
-    return commit_version(
+    log = versioned.read_version(spark, table_root, version=cur)
+    folded = _last_per(log, "id", ["id", "component", "_seq"])
+    return versioned.commit_version(
         folded, table_root, mode="overwrite", expected_version=cur
     )

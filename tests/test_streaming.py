@@ -2527,3 +2527,319 @@ def test_incremental_cdc_ingest_ledger_equals_one_shot(spark, tmp_path):
         .select("chunk").distinct().count()
     )
     assert s1.count() == d1
+
+
+def _replay_docs(spark, src):
+    rows = [
+        (i, " ".join(f"w{(i * 7 + j) % 23} t{j % 4}" for j in range(30)))
+        for i in range(12)
+    ]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+        1
+    ).write.parquet(str(src))
+
+
+def _replay_rows(schema, rows):
+    def write(spark, src):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            str(src)
+        )
+
+    return write
+
+
+def _replay_gz(spark, src):
+    import gzip
+    import io
+
+    out = b""
+    for t in ("doc one", "doc two"):
+        buf = io.BytesIO()
+        with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
+            f.write(t.encode())
+        out += buf.getvalue()
+    src.mkdir()
+    (src / "a.gz").write_bytes(out)
+
+
+def _replay_vecs(spark, src):
+    import json as _json
+
+    src.mkdir()
+    (src / "a.jsonl").write_text(
+        "\n".join(
+            _json.dumps(
+                {
+                    "vec_id": i,
+                    "embedding": [
+                        ((i * 7 + d * 13) % 29) / 29.0 + 0.05
+                        for d in range(16)
+                    ],
+                }
+            )
+            for i in range(40)
+        )
+    )
+
+
+def _replay_warcs(spark, src):
+    from incremental_github_data_pipeline_spark.queries.ext_curation import (
+        _curation_corpus,
+    )
+
+    b1 = [tuple(r) for r in _curation_corpus(spark).collect()
+          if r["payload_id"] < 12]
+    _replay_rows("payload_id long, payload binary", b1)(spark, src)
+
+
+def _replay_case(name, spark, tmp_path):
+    """(write_input, ingest, {table subpath: manifest txn}) per ingester;
+    the txn strings are the ones tables written so far carry."""
+    import datetime as dt
+
+    import incremental_github_data_pipeline_spark.streaming.incremental as inc
+
+    ck = "{ckpt}"
+    d1 = dt.date(2024, 1, 1)
+    cases = {
+        "curation_funnel": (
+            _replay_warcs,
+            lambda s, r, c: inc.run_incremental_curation_funnel(
+                spark, s, r, c
+            ),
+            {
+                "curated": f"cur-funnel-curated:{ck}:0",
+                "audit": f"cur-funnel-audit:{ck}:0",
+                "url_state": f"cur-funnel-url:{ck}:0",
+                "sent_state": f"cur-funnel-sent:{ck}:0",
+            },
+        ),
+        "cdc": (
+            _replay_docs,
+            lambda s, r, c: inc.run_incremental_cdc_ingest(spark, s, r, c),
+            {"ledger": f"cdc-ledger:{ck}:0", "chunk_state": f"cdc-state:{ck}:0"},
+        ),
+        "text": (
+            _replay_gz,
+            lambda s, r, c: inc.run_incremental_text_ingest(spark, s, r, c),
+            {"": f"text-ingest:{ck}:0"},
+        ),
+        "index": (
+            _replay_docs,
+            lambda s, r, c: inc.run_incremental_index_ingest(spark, s, r, c),
+            {
+                t: f"index-{t}:{ck}:0"
+                for t in ("postings", "termstats", "doclens", "docstats")
+            },
+        ),
+        "ann": (
+            _replay_vecs,
+            lambda s, r, c: inc.run_incremental_ann_ingest(
+                spark, s, r, str(tmp_path / "model"), c, m_sub=4, ksub=8
+            ),
+            {"": f"ann-ingest:{ck}:0"},
+        ),
+        "hll": (
+            _replay_rows("seg string, user_id long",
+                         [("a", i) for i in range(50)]),
+            lambda s, r, c: inc.run_incremental_hll_ingest(
+                spark, s, r, c, "seg string, user_id long", "seg", "user_id"
+            ),
+            {"": f"hll-ingest:{ck}:0"},
+        ),
+        "drift": (
+            _replay_rows("win date, payload string",
+                         [(d1, '{"a": 1, "b": 2}'), (d1, '{"a": 3}')]),
+            lambda s, r, c: inc.run_incremental_drift_ingest(spark, s, r, c),
+            {"": f"drift-ingest:{ck}:0"},
+        ),
+        "tcloseness": (
+            _replay_rows("seg string, v int", [("a", 1), ("a", 2), ("b", 2)]),
+            lambda s, r, c: inc.run_incremental_tcloseness_ingest(
+                spark, s, r, c, "seg string, v int", ["seg"], "v"
+            ),
+            {"": f"tclose-ingest:{ck}:0"},
+        ),
+        "volume": (
+            _replay_rows("day date, event_id long",
+                         [(d1, i) for i in range(5)]),
+            lambda s, r, c: inc.run_incremental_volume_ingest(
+                spark, s, r, c, "day date, event_id long", "day"
+            ),
+            {"": f"volume-ingest:{ck}:0"},
+        ),
+        "kmv": (
+            _replay_rows("seg string, user_id long",
+                         [("a", i) for i in range(50)]),
+            lambda s, r, c: inc.run_incremental_kmv_ingest(
+                spark, s, r, c, "seg string, user_id long", "seg", "user_id",
+                k=8,
+            ),
+            {"": f"kmv-ingest:{ck}:0"},
+        ),
+        "profile": (
+            _replay_rows("cat string, n long", [("x", 1), ("y", None)]),
+            lambda s, r, c: inc.run_incremental_profile_ingest(
+                spark, s, r, c, "cat string, n long", ["cat", "n"]
+            ),
+            {"": f"profile-ingest:{ck}:0"},
+        ),
+        "cc": (
+            _replay_rows("id_a long, id_b long", [(1, 2), (3, 4), (4, 5)]),
+            lambda s, r, c: inc.run_incremental_cc_ingest(
+                spark, s, r, c, "id_a long, id_b long"
+            ),
+            {"": f"cc-ingest:{ck}:0"},
+        ),
+        "keep_best": (
+            _replay_rows("doc_id long, text string, q long",
+                         [(1, "a", 10), (2, "b", 30), (3, "c", 20)]),
+            lambda s, r, c: inc.run_incremental_keep_best_ingest(
+                spark, s, r, c, "doc_id long, text string, q long",
+                str(tmp_path / "no_cc"), "q",
+            ),
+            {"": f"keep-best:{ck}:0"},
+        ),
+        "lsh": (
+            _replay_docs,
+            lambda s, r, c: inc.run_incremental_lsh_ingest(spark, s, r, c),
+            {"postings": f"lsh-ingest:{ck}:0", "params": f"lsh-params:{ck}"},
+        ),
+        "bloom": (
+            _replay_rows("k string", [(f"doc-{i}",) for i in range(40)]),
+            lambda s, r, c: inc.run_incremental_bloom_ingest(
+                spark, s, r, c, "k string", "k", n_bits=1 << 12
+            ),
+            {
+                "positions": f"bloom-ingest:{ck}:0",
+                "params": f"bloom-params:{ck}",
+            },
+        ),
+    }
+    return cases[name]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "curation_funnel", "cdc", "text", "index", "ann", "hll", "drift",
+        "tcloseness", "volume", "kmv", "profile", "cc", "keep_best", "lsh",
+        "bloom",
+    ],
+)
+def test_replayed_batch_id_is_a_versioned_no_op(
+    name, spark, tmp_path, monkeypatch
+):
+    """Spark re-runs a batch whose offsets were logged but whose
+    ``commits/<id>`` file is missing: the at-least-once window after a
+    crash between the table commits and the checkpoint commit. The
+    re-run batch must reach the ``txn_id`` path and change nothing: no
+    new version, identical contents, and each manifest still carries
+    the txn string this ingester has always written."""
+    from pathlib import Path
+
+    from incremental_github_data_pipeline_spark.sources import versioned
+
+    write_input, ingest, txns = _replay_case(name, spark, tmp_path)
+    src, root = tmp_path / "src", str(tmp_path / "root")
+    ckpt = str(tmp_path / "ckpt")
+    write_input(spark, src)
+    ingest(str(src), root, ckpt)
+
+    def snapshot():
+        out = {}
+        for table in txns:
+            t = f"{root}/{table}" if table else root
+            rows = versioned.read_version(spark, t).collect()
+            out[table] = (
+                versioned.latest_version(t),
+                sorted(map(repr, rows)),
+            )
+        return out
+
+    before = snapshot()
+    for table, txn in txns.items():
+        t = f"{root}/{table}" if table else root
+        assert versioned.history(t)[-1]["txn"] == txn.format(ckpt=ckpt)
+
+    commit_file = Path(ckpt) / "commits" / "0"
+    assert commit_file.exists()
+    commit_file.unlink()
+    (Path(ckpt) / "commits" / ".0.crc").unlink(missing_ok=True)
+
+    real = versioned.commit_version
+    replayed: list[str] = []
+
+    def recording(*a, **kw):
+        replayed.append(kw.get("txn_id"))
+        return real(*a, **kw)
+
+    monkeypatch.setattr(versioned, "commit_version", recording)
+    ingest(str(src), root, ckpt)
+    monkeypatch.setattr(versioned, "commit_version", real)
+
+    assert commit_file.exists()  # batch 0 ran again and committed
+    assert snapshot() == before
+    per_batch = {t.format(ckpt=ckpt) for t in txns.values() if t.endswith(":0")}
+    if name == "cc":
+        # the re-run sees its own labels, so no label changes: no commit
+        assert replayed == []
+    else:
+        assert set(replayed) == per_batch
+
+
+def test_bm25_exact_ties_rank_by_doc_id_in_both_lanes(spark, tmp_path):
+    """Docs with identical text have equal BM25 statistics, so their
+    scores must be bit-equal and they must rank by doc id, however the
+    shuffle spreads their term rows: in one-shot ``bm25_topk`` and in
+    ``bm25_search_versioned`` over an index ingested in three batches
+    (tied docs in different files and partitions)."""
+    from incremental_github_data_pipeline_spark.operators.text import (
+        bm25_topk,
+    )
+    from incremental_github_data_pipeline_spark.sources.local import (
+        local_rows_df,
+    )
+    from incremental_github_data_pipeline_spark.streaming import (
+        bm25_search_versioned,
+        run_incremental_index_ingest,
+    )
+
+    vocab = [f"q{i}" for i in range(9)]
+    tied_text = " ".join(
+        w for i, w in enumerate(vocab) for _ in range(1 + i % 4)
+    )
+    tied = list(range(3, 60, 4))  # 15 tied docs, interleaved ids
+    rows = [
+        (i, tied_text if i in tied
+         else " ".join(vocab[(i + j) % 9] for j in range(1 + i % 5)))
+        for i in range(60)
+    ]
+    # local (Arrow) frames let the planner broadcast the small sides, so
+    # each doc's term rows stay in the tf frame's (doc, term)-hashed
+    # partitions and reach the per-doc sum in a per-doc order
+    docs = local_rows_df(spark, rows, "doc_id long, text string")
+    queries = local_rows_df(
+        spark, [(1, " ".join(vocab))], "query_id long, qtext string"
+    )
+
+    def check(ranked):
+        got = [
+            (r["doc_id"], r["score"])
+            for r in ranked.orderBy("rank").collect()
+            if r["doc_id"] in tied
+        ]
+        assert [d for d, _ in got] == tied
+        assert len({s for _, s in got}) == 1, got
+
+    check(bm25_topk(docs.repartition(7), queries, k=len(tied)))
+
+    src = tmp_path / "src"
+    root, ckpt = str(tmp_path / "idx"), str(tmp_path / "ckpt")
+    for part in range(3):
+        local_rows_df(
+            spark, [r for r in rows if r[0] % 3 == part],
+            "doc_id long, text string",
+        ).repartition(3).write.mode("append").parquet(str(src))
+        run_incremental_index_ingest(spark, str(src), root, ckpt)
+    check(bm25_search_versioned(spark, root, queries, k=len(tied)))

@@ -507,3 +507,99 @@ def test_restore_rolls_back_as_new_version(spark, tmp_path):
         restore_version(spark, root, version=v_bad - 1, txn_id="r1")
         == again
     )
+
+
+def test_concurrent_writers_never_lose_a_commit(spark, tmp_path):
+    """N threads x M commits on one table (more writers than cores, a
+    short switch interval). Blind appends all land: one distinct
+    version each and every row readable. Writers that pin the same
+    ``expected_version`` race for one version: exactly one wins and
+    every other one raises CommitConflict, never a lost update."""
+    import sys
+    import threading
+
+    from incremental_github_data_pipeline_spark.sources.versioned import (
+        CommitConflict,
+    )
+
+    root = tmp_path / "t"
+    n_writers, n_appends, rows_per = 6, 2, 5
+
+    def run_threads(target):
+        barrier = threading.Barrier(n_writers)
+        out: dict[int, list] = {w: [] for w in range(n_writers)}
+
+        def body(w):
+            barrier.wait()
+            target(w, out[w])
+
+        threads = [
+            threading.Thread(target=body, args=(w,), daemon=True)
+            for w in range(n_writers)
+        ]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        return [r for w in range(n_writers) for r in out[w]]
+
+    def blind(w, out):
+        for m in range(n_appends):
+            base = (w * n_appends + m) * rows_per
+            rows = [(base + i, f"w{w}") for i in range(rows_per)]
+            try:
+                out.append(commit_version(_df(spark, rows), root, mode="append"))
+            except Exception as e:  # noqa: BLE001 - recorded, asserted below
+                out.append(e)
+
+    got = run_threads(blind)
+    n_blind = n_writers * n_appends
+    assert all(isinstance(v, int) for v in got), got
+    assert sorted(got) == list(range(1, n_blind + 1))
+    assert latest_version(root) == n_blind
+    ids = [r["id"] for r in read_version(spark, root).collect()]
+    assert sorted(ids) == list(range(n_blind * rows_per))
+    assert history(root)[-1]["n_rows"] == n_blind * rows_per
+
+    def pinned(w, out):
+        rows = [(10_000 + w * rows_per + i, f"p{w}") for i in range(rows_per)]
+        try:
+            out.append(
+                commit_version(
+                    _df(spark, rows), root, mode="append",
+                    expected_version=n_blind,
+                )
+            )
+        except CommitConflict as e:
+            out.append(e)
+
+    got = run_threads(pinned)
+    wins = [v for v in got if isinstance(v, int)]
+    assert wins == [n_blind + 1], got
+    assert all(isinstance(v, CommitConflict) for v in got if v not in wins)
+    assert latest_version(root) == n_blind + 1
+    assert read_version(spark, root).count() == (n_blind + 1) * rows_per
+    # losers leave no data behind: only referenced dirs remain
+    assert len(list((root / "data").iterdir())) == n_blind + 1
+
+    # replays of one batch racing each other: one version, same answer
+    replay = [(20_000 + i, "r") for i in range(rows_per)]
+
+    def same_txn(w, out):
+        out.append(
+            commit_version(
+                _df(spark, replay), root, mode="append", txn_id="batch:0"
+            )
+        )
+
+    got = run_threads(same_txn)
+    assert got == [n_blind + 2] * n_writers
+    assert latest_version(root) == n_blind + 2
+    assert read_version(spark, root).count() == (n_blind + 2) * rows_per
+    assert len(list((root / "data").iterdir())) == n_blind + 2
